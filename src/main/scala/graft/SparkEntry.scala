@@ -753,7 +753,10 @@ object SparkEntry {
     // (1 - 0.564^2)^48 ~ 1e-8 — and the output EQUALS the exact cosine
     // pair set, so the oracle is plain exact-cosine SQL. At larger n
     // the same budget follows the standard LSH recall curve instead of
-    // going quadratic.
+    // going quadratic. Pairs are scored inside their bucket group, so
+    // the candidate volume (at sf0.1 ~1.9M distinct pairs, ~6M with
+    // repeats across tables) is never built or shuffled as a relation;
+    // only verified pairs reach an exchange.
     "s3_cosine_neardups" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       // production form: planes sized from TABLE STATS (a driver-side

@@ -167,6 +167,12 @@ object Corpus {
     * harnesses between queries) instead of being recomputed per
     * consumer (the before-plan ran the tokenize+explode subtree three
     * times and the LM aggregate twice).
+    *
+    * Contract: `idCol` must be unique. Token counts collapse per input
+    * row, and each row's count × nats term is quantized to
+    * decimal(30,8) before the per-id sum. Rows sharing an id are
+    * therefore merged after quantization, and the last decimal of their
+    * nll can differ from a merge of their (id, token) counts first.
     */
   def unigramNll(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     val spark = docs.sparkSession

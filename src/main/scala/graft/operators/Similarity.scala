@@ -17,9 +17,12 @@ import org.apache.spark.sql.types._
   *     so the only exchange moves <= partitions * |queries| * k rows —
   *     never the scored corpus. A single window over the full cross
   *     score would funnel 10^9 rows into <= |queries| partitions.
-  *   - LSH buckets corpus-side are computed in the same scan (one pass,
-  *     ids + 1 long shuffled, never vectors); queries + their probe
-  *     buckets are broadcast.
+  *   - LSH buckets corpus-side are computed in the same scan (one
+  *     pass). For top-k, queries + their probe buckets are broadcast, so
+  *     the corpus is never shuffled. For near-dups, each (table, bucket)
+  *     row is shuffled once with its vector to its bucket group, and
+  *     pairs are scored inside the group: no pair relation, no vector
+  *     join.
   *   - Hyperplane components come from the SplitMix64 finalizer of the
   *     packed (plane, dim) index — integer-only, so an external SQL
   *     engine can replicate buckets EXACTLY (the DuckDB oracles for
@@ -385,11 +388,8 @@ object Similarity {
     }
   }
 
-  /** Embedding-cosine near-duplicate pairs (rounded score >= minCos)
-    * via banded multi-table hyperplane LSH: `tables` independent
-    * `planes`-bit bucketings; a pair is a candidate if it collides in
-    * ANY table; candidates (ids only — vectors are joined back just for
-    * the surviving pair set) are verified with the exact cosine kernel.
+  /** Near-dup blocking is `tables` independent `planes`-bit bucketings;
+    * a pair is a candidate if it collides in ANY table.
     *
     * maxBucket > 0 bounds per-bucket pair blowup on dense hubs: buckets
     * larger than maxBucket are re-split by ceil(log2(n/maxBucket))
@@ -424,7 +424,16 @@ object Similarity {
     * list is broadcast back). Ids are normalized to long/string.
     */
   def bandedBuckets(corpus: DataFrame, vecCol: String, idCol: String,
-      planes: Int, tables: Int, maxBucket: Int = 0): DataFrame = {
+      planes: Int, tables: Int, maxBucket: Int = 0): DataFrame =
+    bandedRows(corpus, vecCol, idCol, planes, tables, maxBucket,
+      withVec = false).select("id", "tbl", "bucket")
+
+  /** [[bandedBuckets]] as (id, tbl, bucket, v): the row's vector rides
+    * along from the kernel scan when `withVec` (null otherwise), so the
+    * near-dup verification needs no vector join.
+    */
+  private def bandedRows(corpus: DataFrame, vecCol: String, idCol: String,
+      planes: Int, tables: Int, maxBucket: Int, withVec: Boolean): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // the re-split shard id packs (depth tag << 56) | (bucket << depth)
@@ -438,7 +447,7 @@ object Similarity {
     val idSql = sqlNameOf(corpus.schema(idCol).dataType)
 
     def run[I](implicit e1: Encoder[(I, Array[Float])],
-        e2: Encoder[(I, Int, Long, Long)]): DataFrame = {
+        e2: Encoder[(I, Int, Long, Long, Array[Float])]): DataFrame = {
       val banded = corpus
         .select(col(idCol).cast(idSql).as("id"), col(vecCol).as("v"))
         .as[(I, Array[Float])]
@@ -447,16 +456,16 @@ object Similarity {
           it.flatMap { case (id, v) =>
             val mat = mats.get(v.length)
             val ext = bucketOf(v, mat, tables * planes, ExtPlanes)
+            val carried = if (withVec) v else null
             (0 until tables).iterator.map(t =>
-              (id, t, bucketOf(v, mat, t * planes, planes), ext))
+              (id, t, bucketOf(v, mat, t * planes, planes), ext, carried))
           }
-        }.toDF("id", "tbl", "bucket", "ext")
-      if (maxBucket <= 0) banded.select("id", "tbl", "bucket")
+        }.toDF("id", "tbl", "bucket", "ext", "v")
+      if (maxBucket <= 0) banded.select("id", "tbl", "bucket", "v")
       else {
         // materialized: the banded kernel scan feeds the oversize
         // aggregate AND the re-split join below — without the cache the
-        // r06 before-plan ran the corpus kernel scan twice here (and,
-        // through candidatePairs' self-join, four times end to end)
+        // r06 before-plan ran the corpus kernel scan twice here
         val bandedM = materialize(banded)
         val over = broadcast(
           bandedM.groupBy(col("tbl"), col("bucket"))
@@ -477,7 +486,7 @@ object Similarity {
             .otherwise(expr(
               "shiftleft(cast(depth AS bigint), 56) | " +
                 "shiftleft(bucket, depth) | (ext & (shiftleft(1L, depth) - 1L))")))
-          .select("id", "tbl", "bucket")
+          .select("id", "tbl", "bucket", "v")
       }
     }
 
@@ -487,59 +496,156 @@ object Similarity {
     }
   }
 
-  /** Distinct candidate id pairs (id_a < id_b) from the banded buckets —
-    * the pre-verification stage of cosineNearDups, exposed so tests and
-    * capacity planning can measure candidate volume under a maxBucket
-    * cap without running the verify kernel.
+  /** Streams the member pairs of each (tbl, bucket) group of a partition
+    * sorted by (tbl, bucket). One group's members are buffered at a
+    * time and its pairs are produced lazily, so a task holds one group
+    * (bounded by maxBucket when the re-split is on), never the group's
+    * pair output. Each pair of distinct non-null ids comes out once per
+    * group as (lower id, higher id, score(lower's payload, higher's
+    * payload)) when `keep(score)`; members sharing an id and null ids
+    * are skipped, as the `a.id < b.id` predicate of a bucket self-join
+    * would skip them.
+    */
+  private final class BucketPairs[I, P](rows: Iterator[(I, Int, Long, P)],
+      score: (P, P) => Double, keep: Double => Boolean)(
+      implicit ord: Ordering[I]) extends Iterator[(I, I, Double)] {
+    private val in = rows.buffered
+    private val ids = scala.collection.mutable.ArrayBuffer.empty[I]
+    private val ps = scala.collection.mutable.ArrayBuffer.empty[P]
+    // the next pair to try is (i, j), i < j
+    private var i = 0
+    private var j = 1
+    private var pending: (I, I, Double) = null
+
+    /** Buffers the next group; false once the partition is exhausted. */
+    private def nextGroup(): Boolean = {
+      ids.clear(); ps.clear(); i = 0; j = 1
+      if (!in.hasNext) false
+      else {
+        val (_, tbl, bucket, _) = in.head
+        while (in.hasNext && in.head._2 == tbl && in.head._3 == bucket) {
+          val (id, _, _, p) = in.next()
+          if (id != null) { ids += id; ps += p }
+        }
+        true
+      }
+    }
+
+    private def advance(): Unit =
+      while (pending == null && (i < ids.length - 1 || nextGroup())) {
+        if (j < ids.length) {
+          val c = ord.compare(ids(i), ids(j))
+          if (c != 0) {
+            val (lo, hi) = if (c < 0) (i, j) else (j, i)
+            val s = score(ps(lo), ps(hi))
+            if (keep(s)) pending = (ids(lo), ids(hi), s)
+          }
+          j += 1
+        } else { i += 1; j = i + 1 }
+      }
+
+    override def hasNext: Boolean = {
+      if (pending == null) advance()
+      pending != null
+    }
+
+    override def next(): (I, I, Double) = {
+      if (!hasNext) throw new NoSuchElementException("no more bucket pairs")
+      val out = pending
+      pending = null
+      out
+    }
+  }
+
+  /** The banded buckets of [[bandedBuckets]] sent to their (tbl, bucket)
+    * group, sorted by group within each partition, as (id, tbl, bucket,
+    * v) when `withVec` (v null otherwise) — the input of [[BucketPairs]].
+    */
+  private def bucketGroups(corpus: DataFrame, vecCol: String, idCol: String,
+      planes: Int, tables: Int, maxBucket: Int, withVec: Boolean): DataFrame = {
+    // an explicit partition count: the pair work grows with the square
+    // of a group's size, not with its bytes, and AQE would coalesce the
+    // few MB of bucket rows into fewer tasks than there are cores
+    val parts = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    bandedRows(corpus, vecCol, idCol, planes, tables, maxBucket, withVec)
+      .repartition(parts, col("tbl"), col("bucket"))
+      .sortWithinPartitions(col("tbl"), col("bucket"))
+  }
+
+  /** Distinct candidate id pairs (id_a < id_b): every pair of ids that
+    * share a (tbl, bucket) group of the banded buckets in any table.
+    * cosineNearDups scores the same pairs inside their groups and never
+    * builds this relation; it is exposed so tests and capacity planning
+    * can measure candidate volume under a maxBucket cap. Only ids ride
+    * the group exchange here; the raw per-group pairs (one per
+    * agreeing table) go through one dedup exchange.
     */
   def candidatePairs(corpus: DataFrame, vecCol: String, idCol: String,
       planes: Int, tables: Int, maxBucket: Int = 0): DataFrame = {
-    // materialized HASH-PARTITIONED ON THE JOIN KEY: both sides of the
-    // bucket self-join read this table, so the repartition pays the
-    // join's exchange ONCE and both sides (and their sorts) reuse the
-    // cached partitioning — without it each side re-ran the banded
-    // kernel scan (the r06 before-plan showed four MapPartitions corpus
-    // scans for one s3 query) and the join re-exchanged the table
-    // twice. Partition count rides spark.sql.shuffle.partitions, and
-    // locally this also breaks the 1-input-split scan's single-task
-    // funnel for the (candidate-volume-sized) pair generation.
-    val keyed = materialize(
-      bandedBuckets(corpus, vecCol, idCol, planes, tables, maxBucket)
-        .repartition(col("tbl"), col("bucket")))
-    // candidate pairs carry IDS ONLY — vectors are joined back just for
-    // the surviving pair set
-    keyed.as("a").join(keyed.as("b"),
-        col("a.tbl") === col("b.tbl") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val groups = bucketGroups(corpus, vecCol, idCol, planes, tables,
+      maxBucket, withVec = false).select("id", "tbl", "bucket")
+
+    def run[I](implicit ord: Ordering[I], e1: Encoder[(I, Int, Long)],
+        e2: Encoder[(I, I)]): DataFrame =
+      groups.as[(I, Int, Long)]
+        .mapPartitions { it =>
+          new BucketPairs[I, Null](it.map { case (id, t, b) => (id, t, b, null) },
+            (_, _) => 0.0, _ => true).map { case (a, b, _) => (a, b) }
+        }
+        .toDF("id_a", "id_b")
+        .dropDuplicates("id_a", "id_b")
+
+    corpus.schema(idCol).dataType match {
+      case StringType =>
+        implicit val ord: Ordering[String] = Utf8Ordering
+        run[String]
+      case _ => run[Long]
+    }
   }
 
+  /** Embedding-cosine near-duplicate pairs (id_a < id_b, rounded score
+    * >= minCos) via banded multi-table LSH, verified where the pair's
+    * members meet: each banded-bucket row travels once, with its
+    * vector, to its (tbl, bucket) group, and one kernel scores every
+    * member pair of the group there. No candidate-pair relation is
+    * built and no vector is joined back; only verified pairs (at most
+    * `tables` rows per result pair) reach the final dedup exchange.
+    *
+    * Contracts:
+    *   - `idCol` must be unique. With duplicate ids the dedup keeps one
+    *     score per id pair, whichever vectors produced it.
+    *   - Memory: a task buffers one (tbl, bucket) group's members and
+    *     streams its pairs. maxBucket > 0 bounds a group to about
+    *     maxBucket members (the re-split); with maxBucket = 0 a dense
+    *     hub's bucket is buffered whole.
+    */
   def cosineNearDups(corpus: DataFrame, vecCol: String, idCol: String,
       minCos: Double, planes: Int = 8, tables: Int = 8,
       maxBucket: Int = 0): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val idType = corpus.schema(idCol).dataType
-    val idSql = sqlNameOf(idType)
-    val cand = candidatePairs(corpus, vecCol, idCol, planes, tables, maxBucket)
-    val vecs = corpus.select(col(idCol).cast(idSql).as("id"),
-      col(vecCol).as("v"))
+    val groups = bucketGroups(corpus, vecCol, idCol, planes, tables,
+      maxBucket, withVec = true)
+    // roundedCosine, whose decimal rounding moves a score by at most
+    // 5e-7: a raw cosine more than 1e-6 below minCos cannot round up to
+    // it, so such a pair (nearly every candidate) skips the rounding
+    val floor = minCos - 1e-6
+    val score: (Array[Float], Array[Float]) => Double = (a, b) => {
+      val raw = rawCosine(a, b)
+      if (raw < floor) raw else round6(raw)
+    }
 
     def verify[I](implicit ord: Ordering[I],
-        e3: Encoder[(I, I, Double)],
-        e4: Encoder[(I, I, Array[Float], Array[Float])]): DataFrame =
-      cand
-        .join(vecs.select(col("id").as("id_a"), col("v").as("va")), "id_a")
-        .join(vecs.select(col("id").as("id_b"), col("v").as("vb")), "id_b")
-        .select(col("id_a"), col("id_b"), col("va"), col("vb"))
-        .as[(I, I, Array[Float], Array[Float])]
-        .mapPartitions(_.flatMap { case (ia, ib, va, vb) =>
-          val s = roundedCosine(va, vb)
-          if (s >= minCos) Iterator((ia, ib, s)) else Iterator.empty
-        })
+        e1: Encoder[(I, Int, Long, Array[Float])],
+        e2: Encoder[(I, I, Double)]): DataFrame =
+      groups.as[(I, Int, Long, Array[Float])]
+        .mapPartitions(it =>
+          new BucketPairs[I, Array[Float]](it, score, _ >= minCos))
         .toDF("id_a", "id_b", "score")
+        .dropDuplicates("id_a", "id_b")
         .select(col("id_a").cast(idType).as("id_a"),
           col("id_b").cast(idType).as("id_b"), col("score"))
 
@@ -570,6 +676,11 @@ object Similarity {
     * rides the broadcast, Faiss-style "train then encode" as two scans).
     * Squared-error terms are decimal-summed inside the row's aggregate
     * HOF, so the fold is exact and engine-order-free.
+    *
+    * Nulls propagate as in the SQL form: a null vector gives null codes
+    * and sq_err. A null element nulls the vector's sq_err. It adds no
+    * code when its dimension has a range (its code is null, and
+    * array_join skips nulls), and code 0 otherwise.
     */
   def sq8Quantize(df: DataFrame, vecCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
@@ -595,26 +706,40 @@ object Similarity {
     df.crossJoin(broadcast(stats))
       .select(col(idCol).cast("string").as("id"), v.as("v"),
         col("mns"), col("mxs"))
-      .as[(String, Seq[Double], Seq[Double], Seq[Double])]
+      // boxed elements: a null element (or an all-null dimension's null
+      // stats) must reach the kernel, not fail the deserializer
+      .as[(String, Seq[java.lang.Double], Seq[java.lang.Double],
+        Seq[java.lang.Double])]
       .mapPartitions(_.map { case (id, vec, mns, mxs) =>
         if (vec == null) (id, None: Option[String], None: Option[Double])
         else {
           val sb = new java.lang.StringBuilder
+          def appendCode(code: Int): Unit = {
+            if (sb.length > 0) sb.append(',')
+            sb.append(code)
+          }
+          // null once any element is null, as the SQL decimal sum is
           var acc = java.math.BigDecimal.ZERO
           var i = 0
           while (i < vec.length) {
             val x = vec(i); val mn = mns(i); val mx = mxs(i)
-            val code = if (mx > mn) sq8Code(x, mn, mx) else 0
-            val dq = if (mx > mn) mn + code.toDouble * (mx - mn) / 255.0
-              else mn
-            val se = (x - dq) * (x - dq)
-            if (i > 0) sb.append(',')
-            sb.append(code)
-            acc = acc.add(java.math.BigDecimal.valueOf(se)
-              .setScale(10, java.math.RoundingMode.HALF_UP))
+            val ranged = mn != null && mx != null &&
+              mx.doubleValue > mn.doubleValue
+            if (x == null) {
+              acc = null
+              if (!ranged) appendCode(0)
+            } else {
+              val code = if (ranged) sq8Code(x, mn, mx) else 0
+              val dq = if (ranged) mn + code.toDouble * (mx - mn) / 255.0
+                else mn.doubleValue
+              val se = (x - dq) * (x - dq)
+              appendCode(code)
+              if (acc != null) acc = acc.add(java.math.BigDecimal.valueOf(se)
+                .setScale(10, java.math.RoundingMode.HALF_UP))
+            }
             i += 1
           }
-          (id, Some(sb.toString), Some(round6(acc.doubleValue)))
+          (id, Some(sb.toString), Option(acc).map(a => round6(a.doubleValue)))
         }
       })
       .toDF("id", "codes", "sq_err")

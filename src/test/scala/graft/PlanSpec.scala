@@ -95,6 +95,47 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), p)
   }
 
+  test("s3: pairs are verified in their bucket — no id-pair join, no shuffled candidate relation") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // sf0.01, not sf0.001: at sf0.001 s3 finds no pair, and AQE folds
+    // the finished plan into an empty relation that hides its exchanges
+    val sf = "/root/testdata/sf0.01"
+    val df = SparkEntry.queries("s3_cosine_neardups")(spark, sf)
+    val result = df.collect().length
+    assert(result > 0)
+    val p = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val pairIds = Set("id_a", "id_b")
+    def names(es: Seq[Expression]) = es.flatMap(_.references.map(_.name)).toSet
+    // vectors ride with the bucket rows: nothing is joined back by id
+    val idJoins = helper.collect(p) {
+      case j: BaseJoinExec if (names(j.leftKeys ++ j.rightKeys) & pairIds).nonEmpty => j
+    }
+    assert(idJoins.isEmpty, s"a join keyed on pair ids:\n$p")
+    // no exchange carries the candidate pairs: the widest one moves the
+    // banded rows (one per vector and table), and the ones keyed on the
+    // pair ids move verified pairs only (at most one per table each)
+    val n = spark.read.parquet(s"$sf/embeddings.parquet").count()
+    val written = helper.collect(p) { case e: ShuffleExchangeExec =>
+      (names(e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions
+        case _ => Nil
+      }), e.metrics("shuffleRecordsWritten").value)
+    }
+    assert(written.nonEmpty, p.toString)
+    written.foreach { case (keys, rows) =>
+      assert(rows <= n * SparkEntry.S3Tables,
+        s"an exchange moved $rows rows > $n vectors x ${SparkEntry.S3Tables} tables:\n$p")
+      if ((keys & pairIds).nonEmpty)
+        assert(rows <= result.toLong * SparkEntry.S3Tables,
+          s"the pair-id exchange moved $rows rows for $result result pairs:\n$p")
+    }
+  }
+
   test("d4: pigeonhole segment join is a hash join, never a cross product") {
     val df = SparkEntry.queries("d4_simhash_neardups")(spark, dir)
     df.collect()

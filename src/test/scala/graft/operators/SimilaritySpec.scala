@@ -170,6 +170,78 @@ class SimilaritySpec extends AnyFunSuite {
         s"of ${exact.size} true pairs")
   }
 
+  test("s3 string ids: same pairs as long ids, ordered by Spark's string order") {
+    // pairs are ordered inside the bucket kernel with Utf8Ordering, not
+    // by Catalyst's `<`; this pins the two to each other. Even ids get a
+    // U+FF5E prefix, odd ids U+1F600 (a surrogate pair): code-point
+    // (Spark) order puts even first, java.lang.String's UTF-16 order odd
+    import spark.implicits._
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    def sid(i: Long): String =
+      (if (i % 2 == 0) "\uFF5E" else "\uD83D\uDE00") + f"$i%05d"
+    val toId = emb.as[(Long, Array[Float])].collect()
+      .map { case (i, _) => sid(i) -> i }.toMap
+    val sidUdf = udf((i: Long) => sid(i))
+    val strEmb = emb.select(sidUdf(col("vec_id")).as("vec_id"), col("embedding"))
+    // low planes + a small cap: dense buckets, and the re-split runs too
+    val (minCos, planes, tables, cap) = (0.3, 3, 6, 40)
+    val longOut = Similarity.cosineNearDups(emb, "embedding", "vec_id",
+        minCos, planes, tables, cap)
+      .as[(Long, Long, Double)].collect().toSet
+    val strRes = Similarity.cosineNearDups(strEmb, "embedding", "vec_id",
+      minCos, planes, tables, cap)
+    val strOut = strRes.as[(String, String, Double)].collect()
+    assert(longOut.size > 100, s"fixture too sparse: ${longOut.size}")
+    assert(strOut.map { case (a, b, s) =>
+      (math.min(toId(a), toId(b)), math.max(toId(a), toId(b)), s)
+    }.toSet == longOut)
+    assert(strOut.length == longOut.size, "a pair came out twice")
+    assert(strRes.filter(col("id_a") >= col("id_b")).isEmpty,
+      "id_a < id_b must hold in Spark's string order")
+    // the fixture is not vacuous: UTF-16 order disagrees on some pair
+    assert(strOut.exists { case (a, b, _) => a.compareTo(b) > 0 })
+    // candidatePairs takes the same group path for string ids
+    val longCand = Similarity.candidatePairs(emb, "embedding", "vec_id",
+      planes, tables, cap).as[(Long, Long)].collect().toSet
+    val strCand = Similarity.candidatePairs(strEmb, "embedding", "vec_id",
+      planes, tables, cap)
+    assert(strCand.filter(col("id_a") >= col("id_b")).isEmpty)
+    assert(strCand.as[(String, String)].collect()
+      .map { case (a, b) => (toId(a) min toId(b), toId(a) max toId(b)) }
+      .toSet == longCand)
+  }
+
+  test("candidatePairs is the distinct bucket self-join, and verified pairs come from it") {
+    // the pair relation cosineNearDups no longer builds, computed the
+    // old way: every id pair sharing a (tbl, bucket) of bandedBuckets
+    import spark.implicits._
+    val docs = spread(300)
+    val (planes, tables, cap) = (2, 5, 40)
+    val b = Similarity.bandedBuckets(docs, "embedding", "vec_id",
+      planes, tables, cap)
+    val selfJoin = b.as("a").join(b.as("b"),
+        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
+          col("a.id") < col("b.id"))
+      .select(col("a.id"), col("b.id")).distinct()
+      .as[(Long, Long)].collect().toSet
+    val cand = Similarity.candidatePairs(docs, "embedding", "vec_id",
+      planes, tables, cap).as[(Long, Long)].collect()
+    assert(cand.length == cand.toSet.size, "candidate pairs are not distinct")
+    assert(cand.toSet == selfJoin)
+    // verification keeps exactly the candidates at or above minCos
+    val vec = docs.as[(Long, Array[Float])].collect().toMap
+    val minCos = 0.2
+    val want = selfJoin.flatMap { case (a, c) =>
+      val s = Similarity.roundedCosine(vec(a), vec(c))
+      if (s >= minCos) Some((a, c, s)) else None
+    }
+    val got = Similarity.cosineNearDups(docs, "embedding", "vec_id",
+        minCos, planes, tables, cap)
+      .as[(Long, Long, Double)].collect()
+    assert(got.length == want.size && got.toSet == want)
+  }
+
   test("cosine near-dups finds identical pairs at score 1") {
     val pairs = Similarity.cosineNearDups(vecs(), "embedding", "vec_id",
         minCos = 0.999, planes = 4)

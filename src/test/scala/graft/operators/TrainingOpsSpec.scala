@@ -191,20 +191,18 @@ class TrainingOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("e2: JIT encode kernel is bit-identical to the Catalyst HOF form") {
-    // the r06 optimization moved the encode pass from an interpreted
-    // transform/aggregate expression chain into a typed kernel; this
-    // pins the kernel against the ORIGINAL HOF formulation (reproduced
-    // here verbatim) on the real sf0.001 embeddings — codes string and
-    // decimal-summed sq_err must match to the last bit
+  /** sq8Quantize's ORIGINAL Catalyst transform/aggregate formulation,
+    * the reference the typed encode kernel must match bit for bit, as
+    * (vec_id, codes, sq_err) rows ordered by vec_id.
+    */
+  private def sq8Hof(df: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.functions._
-    val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val v = col("embedding").cast("array<double>")
     val stats = df.select(posexplode(v).as(Seq("pos", "x")))
       .groupBy("pos").agg(min("x").as("mn"), max("x").as("mx"))
       .agg(array_sort(collect_list(struct(col("pos"), col("mn"), col("mx"))))
         .as("stats"))
-    val hof = df.crossJoin(broadcast(stats))
+    df.crossJoin(broadcast(stats))
       .select(col("vec_id"), v.as("v"), col("stats"))
       .withColumn("enc", transform(col("v"), (x, i) => {
         val st = element_at(col("stats"), i + 1)
@@ -225,10 +223,48 @@ class TrainingOpsSpec extends AnyFunSuite {
             .cast("decimal(30,10)"))
           .cast("double"), 6).as("sq_err"))
       .orderBy("vec_id").collect()
-      .map(r0 => (r0.getLong(0), r0.getString(1), r0.getDouble(2)))
-    val kernel = Similarity.sq8Quantize(df, "embedding", "vec_id")
+      .map(r0 => (r0.getLong(0), Option(r0.getString(1)),
+        Option(r0.get(2)).map(_.asInstanceOf[Double])))
+      .toSeq
+  }
+
+  private def sq8Kernel(df: org.apache.spark.sql.DataFrame) =
+    Similarity.sq8Quantize(df, "embedding", "vec_id")
       .orderBy("vec_id").collect()
-      .map(r0 => (r0.getLong(0), r0.getString(1), r0.getDouble(2)))
-    assert(kernel.toSeq == hof.toSeq)
+      .map(r0 => (r0.getLong(0), Option(r0.getString(1)),
+        Option(r0.get(2)).map(_.asInstanceOf[Double])))
+      .toSeq
+
+  test("e2: JIT encode kernel is bit-identical to the Catalyst HOF form") {
+    // the r06 optimization moved the encode pass from an interpreted
+    // transform/aggregate expression chain into a typed kernel; this
+    // pins the kernel against the ORIGINAL HOF formulation (sq8Hof) on
+    // the real sf0.001 embeddings — codes string and decimal-summed
+    // sq_err must match to the last bit
+    val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val kernel = sq8Kernel(df)
+    assert(kernel.forall(r => r._2.isDefined && r._3.isDefined))
+    assert(kernel == sq8Hof(df))
+  }
+
+  test("e2: null vectors and null elements propagate as in the HOF form") {
+    // dim 1 has a range and a null element (its code is dropped), dim 2
+    // is constant with a null element (code 0), dim 3 is all null (null
+    // stats, code 0); any null element nulls the vector's sq_err
+    val df = spark.sql("""SELECT * FROM VALUES
+        (0L, CAST(array(1.0, NULL, 3.0, NULL) AS ARRAY<FLOAT>)),
+        (1L, CAST(array(2.0, 5.0, NULL, NULL) AS ARRAY<FLOAT>)),
+        (2L, CAST(array(4.0, 6.0, 3.0, NULL) AS ARRAY<FLOAT>)),
+        (3L, CAST(NULL AS ARRAY<FLOAT>)),
+        (4L, CAST(array(4.0, 5.0) AS ARRAY<FLOAT>))
+        AS t(vec_id, embedding)""")
+    val kernel = sq8Kernel(df)
+    assert(kernel == sq8Hof(df))
+    assert(kernel.take(4) == Seq(
+      (0L, Some("0,0,0"), None),
+      (1L, Some("85,0,0,0"), None),
+      (2L, Some("255,255,0,0"), None),
+      (3L, None, None)))
+    assert(kernel(4)._2.contains("255,0") && kernel(4)._3.isDefined)
   }
 }
