@@ -243,7 +243,6 @@ object Pipeline {
     // would otherwise drop the doc from BOTH branches)
     val nSpans = coalesce(size($"spans"), lit(0))
     val light = in.filter(nSpans <= cfg.saltThreshold)
-      .as[Doc]
       .mapPartitions(it => extractFused(it, fmt, snapshotId, audit))
 
     // salted explode/shuffle path for mega-docs
@@ -253,7 +252,6 @@ object Pipeline {
     val salted = flat.repartition(parts,
       hash($"doc_id", floor($"offset" / lit(cfg.chunkSpans))))
     val extracted = salted
-      .as[InRow]
       .mapPartitions(it => it.map(extractRow(_, fmt)))
     // shuffle #2: co-locate + secondary-sort, then stream-merge per doc;
     // `pos` tie-breaks duplicate offsets deterministically (same input-
@@ -261,7 +259,6 @@ object Pipeline {
     val heavy = extracted
       .repartition(parts, $"doc_id")
       .sortWithinPartitions($"doc_id", $"offset", $"pos")
-      .as[ExRow]
       .mapPartitions(it => reassemble(it, snapshotId, audit))
 
     light.unionByName(heavy)

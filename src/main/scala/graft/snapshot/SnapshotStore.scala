@@ -29,6 +29,12 @@ import scala.jdk.CollectionConverters._
   * (north_rule: "checkpoint/resume by committed snapshot so a killed
   * run restarts at the last completed partition set").
   *
+  * graft.Job writes up to 4 buckets at once but calls `latest`,
+  * `newWriteDirs` and `commit` only from its calling thread, and commits
+  * in bucket order: the log of one Job run adds its buckets as an
+  * in-order prefix, and a kill leaves at most 4 buckets' dirs as
+  * orphans. The store itself stays safe for concurrent committers.
+  *
   * The reference's analog is the per-file JSON result sink + batch meta
   * (use_api/batch_processor.py:130-162) — here hardened into an atomic,
   * resumable table commit.

@@ -4,7 +4,11 @@ import graft.data.CorpusGen
 import graft.model._
 import graft.snapshot.SnapshotStore
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.explode
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
 
 /** Checkpoint/resume via committed snapshots (north_rule): a run killed
   * after k buckets restarts at the last committed bucket set; the final
@@ -17,11 +21,24 @@ class ResumeSpec extends AnyFunSuite {
   private val N = 200
   private val B = 4
 
-  private def bucketInput(b: Int) = {
+  private def bucketInput(b: Int): Dataset[Doc] = {
     import spark.implicits._
     val per = N / B
     spark.range(b.toLong * per, (b + 1).toLong * per)
       .map(i => CorpusGen.genDoc(CorpusGen.DefaultSeed, i).input)
+  }
+
+  /** Every doc exactly once, with the golden spans. */
+  private def assertGolden(store: SnapshotStore): Unit = {
+    import spark.implicits._
+    val table = Job.readExtracted(spark, store)
+    assert(table.count() == N.toLong)
+    assert(table.groupBy($"doc_id").count().filter($"count" =!= 1).count() == 0)
+    val expected = CorpusGen.goldens(N).map(_.expected)
+    val a = table.select($"doc_id", explode($"spans").as("s"))
+    val e = expected.toDS().select($"doc_id", explode($"spans").as("s"))
+    assert(a.exceptAll(e).count() == 0)
+    assert(e.exceptAll(a).count() == 0)
   }
 
   test("kill after 2 of 4 buckets, resume, final table complete + exact") {
@@ -30,9 +47,17 @@ class ResumeSpec extends AnyFunSuite {
     val store = new SnapshotStore(root)
     val cfg = ExtractConfig(partitions = 4)
 
-    // first run "killed" after 2 buckets
-    val (ran1, _) = Job.runResumable(spark, store, B, bucketInput, cfg, maxBuckets = 2)
+    // first run "killed" after 2 buckets; only those two inputs are
+    // asked for, on the calling thread
+    val calls = ArrayBuffer.empty[(Int, Thread)]
+    val recording: Int => Dataset[Doc] = b => {
+      calls += ((b, Thread.currentThread()))
+      bucketInput(b)
+    }
+    val (ran1, _) = Job.runResumable(spark, store, B, recording, cfg, maxBuckets = 2)
     assert(ran1 == 2)
+    assert(calls.map(_._1) == Seq(0, 1))
+    assert(calls.forall(_._2 eq Thread.currentThread()))
     assert(store.committedBuckets == Set(0, 1))
     assert(store.latest.get.snapshot_id == 2L)
 
@@ -47,18 +72,89 @@ class ResumeSpec extends AnyFunSuite {
     assert(ran3 == 0)
 
     // final table: every doc exactly once, equal to expected goldens
-    val table = Job.readExtracted(spark, store2)
-    assert(table.count() == N.toLong)
-    assert(table.groupBy($"doc_id").count().filter($"count" =!= 1).count() == 0)
-    val expected = CorpusGen.goldens(N).map(_.expected)
-    val a = table.select($"doc_id", org.apache.spark.sql.functions.explode($"spans").as("s"))
-    val e = expected.toDS().select($"doc_id", org.apache.spark.sql.functions.explode($"spans").as("s"))
-    assert(a.exceptAll(e).count() == 0)
-    assert(e.exceptAll(a).count() == 0)
+    assertGolden(store2)
 
     // audit table covers all docs across snapshots
     val audit = Job.readAudit(spark, store2)
     assert(audit.as[AuditRow].collect().map(_.docs).sum == N.toLong)
+  }
+
+  // bucket 2 fails at write time (its input's tasks throw) or while it
+  // is set up (bucketInput throws on the calling thread)
+  Seq("at write time", "while set up").foreach { when =>
+    test(s"a bucket failing $when: earlier buckets commit, later ones " +
+        "do not, the failure propagates, and a rerun completes") {
+      import spark.implicits._
+      val root = Files.createTempDirectory("graft-snap7").toString
+      val store = new SnapshotStore(root)
+      val cfg = ExtractConfig(partitions = 4)
+      val failing: Int => Dataset[Doc] = {
+        case 2 if when == "while set up" =>
+          throw new IllegalStateException("bucket 2 fails")
+        case 2 =>
+          bucketInput(2).mapPartitions(it =>
+            it.map[Doc](_ => throw new IllegalStateException("bucket 2 fails")))
+        case b => bucketInput(b)
+      }
+
+      val ex = intercept[Exception] {
+        Job.runResumable(spark, store, B, failing, cfg)
+      }
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("bucket 2 fails")), ex)
+      assert(store.committedBuckets == Set(0, 1))
+      val last = store.latest.get.snapshot_id
+      assert(last == 2L)
+      (1L to last).foreach { id =>
+        assert(store.readSnapshot(id).buckets.forall(_.bucket < 2), id)
+      }
+
+      val store2 = new SnapshotStore(root)
+      val (ran, _) = Job.runResumable(spark, store2, B, bucketInput, cfg)
+      assert(ran == 2)
+      assert(store2.committedBuckets == Set(0, 1, 2, 3))
+      assertGolden(store2)
+    }
+  }
+
+  test("overlapped buckets commit in bucket order; audit rows carry the " +
+      "id of the snapshot that adds their bucket") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-snap8").toString
+    val store = new SnapshotStore(root)
+    val cfg = ExtractConfig(partitions = 4)
+    // bucket 0 (one input partition, so one task slot) cannot finish
+    // until a task of bucket 1 has started: this only passes if the two
+    // buckets run at the same time, and bucket 1 may well finish first
+    ResumeSpec.bucket1Started = new CountDownLatch(1)
+    val gated: Int => Dataset[Doc] = {
+      case 0 =>
+        spark.range(0L, (N / B).toLong, 1L, 1)
+          .map(i => CorpusGen.genDoc(CorpusGen.DefaultSeed, i).input)
+          .mapPartitions { it =>
+            if (!ResumeSpec.bucket1Started.await(60, TimeUnit.SECONDS))
+              throw new IllegalStateException("bucket 0 ran alone")
+            it
+          }
+      case 1 =>
+        bucketInput(1).mapPartitions { it =>
+          ResumeSpec.bucket1Started.countDown()
+          it
+        }
+      case b => bucketInput(b)
+    }
+    val (ran, docs) = Job.runResumable(spark, store, B, gated, cfg)
+    assert(ran == B && docs == N.toLong)
+
+    (1 to B).foreach { id =>
+      val snap = store.readSnapshot(id.toLong)
+      assert(snap.buckets.map(_.bucket) == (0 until id), id)
+      val added = snap.buckets.last
+      val ids = spark.read.parquet(added.auditDir).as[AuditRow]
+        .collect().map(_.snapshot_id).distinct.toSeq
+      assert(ids == Seq(id.toLong), s"bucket ${added.bucket}")
+    }
+    assertGolden(store)
   }
 
   test("duplicate bucket commit is rejected") {
@@ -183,4 +279,11 @@ class ResumeSpec extends AnyFunSuite {
     // and the committed slot holds the RECLAIMER's snapshot
     assert(s2.readSnapshot(2L).buckets.map(_.bucket) == Seq(0, 1))
   }
+}
+
+object ResumeSpec {
+  /** Released by the first task of bucket 1 in the overlap test (tasks
+    * run in this JVM under the local master).
+    */
+  @volatile var bucket1Started: CountDownLatch = _
 }
